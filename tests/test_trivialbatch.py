@@ -1,6 +1,6 @@
 """Pinning of the Arrow-vectorized batch extraction (kernel/trivialbatch
-+ the vec_batch paths in operators/extract) against the exact spec
-pipeline.  vec_trivial is compared directly with
++ the span core kernel/spanbatch behind operators/extract) against the
+exact spec pipeline.  vec_trivial is compared directly with
 extract_spans(parse(...)) — NOT with the Python trivial path — so an
 RE2-vs-Python-re acceptance difference can only surface as a fallback,
 never as a divergence.  The Spark-level tests pin the full operators
@@ -94,8 +94,6 @@ def test_randomized_corpora_vs_full_pipeline():
 
 # ---------------- Spark-level operator pinning ----------------
 
-SF = "/root/testdata/sf0.001"
-
 
 @pytest.fixture(scope="module")
 def spark():
@@ -110,7 +108,8 @@ EDGE_DOCS = [
     # (doc_id, [(kind, text, media_ref, offset)])
     ("d1", [("text", "<p>a b</p>", None, 0),
             ("media", None, "img://1", 1),
-            ("text", "<table><tr><td>x</td></tr></table>", None, 2)]),
+            ("text", "<table><tr><td>x</td></tr></table>", None, 2),
+            ("text", "<!DOCTYPE html><p>doc <b>type</b></p>", None, 3)]),
     ("d2", [("text", "", None, 0), ("text", None, None, 1)]),
     ("d3", [("weird", "<p>k</p>", None, 0),
             ("media", "alt text", "img://2", 1),
@@ -119,6 +118,9 @@ EDGE_DOCS = [
     ("d4", [("text", "<div><p>deep</p><footer>f</footer></div>", None, 0),
             ("text", "<p>" + "w " * 40 + "</p>", None, 1)]),
     ("d5", []),
+    ("d6", None),
+    ("d7", [("text", "<p>no offset</p>", None, None),
+            ("media", None, "img://7", 3)]),
 ]
 
 
@@ -135,18 +137,20 @@ def _mk_nested(spark, docs):
         ]))),
     ])
     return spark.createDataFrame(
-        [(d, [tuple(s) for s in spans]) for d, spans in docs], schema)
+        [(d, None if spans is None else [tuple(s) for s in spans])
+         for d, spans in docs], schema)
 
 
-def _expected_doc_rows(docs, *, max_span_bytes=None, min_words=1,
-                       max_link_density=0.5):
+def _expected_doc_rows(docs, *, max_span_bytes=None, **kw):
     """Reference semantics of extract_spans_doc, straight from the
-    kernel (the pre-vectorization row loop, reimplemented here)."""
+    kernel, one document at a time; ``kw`` goes to extract_html."""
     from html_qt_spark.kernel.extractor import extract_html
     from html_qt_spark.operators.extract import QUARANTINE_KIND
 
     rows = []
     for doc_id, spans in docs:
+        if spans is None:
+            continue
         out = []
         idx = 0
         try:
@@ -159,9 +163,7 @@ def _expected_doc_rows(docs, *, max_span_bytes=None, min_words=1,
                     continue
                 if max_span_bytes and len(text) > max_span_bytes:
                     raise ValueError(f"oversize-span:{len(text)}")
-                for k, t, m in extract_html(
-                        text, min_words=min_words,
-                        max_link_density=max_link_density):
+                for k, t, m in extract_html(text, **kw):
                     out.append((doc_id, idx, k, t, m, offset))
                     idx += 1
         except Exception as exc:  # noqa: BLE001
@@ -196,19 +198,11 @@ def test_spark_doc_mode_params(spark):
     from html_qt_spark.operators.extract import extract_spans_doc
 
     df = _mk_nested(spark, EDGE_DOCS)
-    got = _collect6(extract_spans_doc(df, min_words=2,
-                                      max_link_density=0.0))
-    assert got == _expected_doc_rows(EDGE_DOCS, min_words=2,
-                                     max_link_density=0.0)
-
-
-def test_spark_doc_mode_memoized_matches(spark):
-    """memoize_spans forces the row loop — results must be identical."""
-    from html_qt_spark.operators.extract import extract_spans_doc
-
-    df = _mk_nested(spark, EDGE_DOCS)
-    assert _collect6(extract_spans_doc(df, memoize_spans=64)) == \
-        _expected_doc_rows(EDGE_DOCS)
+    for kw in ({"min_words": 2, "max_link_density": 0.0},
+               {"reference_compat": True},
+               {"fragment_context": "td"}):
+        assert _collect6(extract_spans_doc(df, **kw)) == \
+            _expected_doc_rows(EDGE_DOCS, **kw), kw
 
 
 MEDIA_TRAP_DOCS = [
@@ -281,7 +275,7 @@ def test_spark_exploded_mode_edges(spark):
         T.StructField("media_ref", T.StringType()),
     ])
     flat = [(d, s[3], s[0], s[1], s[2])
-            for d, spans in EDGE_DOCS for s in spans]
+            for d, spans in EDGE_DOCS for s in spans or []]
     df = spark.createDataFrame(flat, schema)
     got = _collect6(extract_spans_exploded(df))
     # exploded mode numbers spans per doc through its window — same
@@ -292,7 +286,7 @@ def test_spark_exploded_mode_edges(spark):
     exp = []
     for doc_id, spans in EDGE_DOCS:
         out = []
-        for kind, text, ref, offset in spans:
+        for kind, text, ref, offset in spans or []:
             if kind == "media":
                 out.append(("media", text, ref, offset))
                 continue
